@@ -413,9 +413,15 @@ def retrieval_scorecard(
     Scale shape: each system's list is |queries|·k rows; the relevant
     hit per query is found by one equi-join on (query, doc) against the
     query set, then everything collapses in one combinable aggregate.
+
+    Raises ``ValueError`` on an empty query frame: the mean over zero
+    queries is undefined (Spark's ``div`` by 0 would return a silent
+    NULL ``mrr_micro``).
     """
     q = queries.select(F.col(query_id_col).alias("_q"))
     n_q = q.count()
+    if n_q == 0:
+        raise ValueError("retrieval_scorecard: the query frame is empty")
     parts = []
     for name, df, rank_col in systems:
         hit = df.filter(F.col(query_id_col) == F.col(id_col)).select(

@@ -34,8 +34,16 @@ Physical strategy (Spark-first, designed for the 10^12-page table):
 
 3. The entire join is scan → broadcast hash join with the codegen'd
    PIP predicate as the join condition.  One pass, no shuffle of the
-   page side, no union, no Python workers.  (Round 1 used an Arrow
-   ``mapInPandas`` refine; on many-core hosts the JVM↔Python-worker
+   page side, no union, no Python workers.  ``sfilter`` /
+   ``sfilter_inverse`` are the same single pass as a broadcast
+   ``left_semi`` / ``left_anti`` join: each page row is emitted at most
+   once, so no dedup exchange and no second scan of the pages.  The
+   predicate is built on the driver as ONE Spark SQL expression string
+   (one ``F.expr``, not a py4j round trip per expression node) and the
+   Morton ``cell`` column is memoised per ``(x, y, res)``, so building a
+   join against a cached cover costs tens of py4j calls.  (Round 1
+   used an Arrow ``mapInPandas`` refine; on many-core hosts the
+   JVM↔Python-worker
    interplay caused scheduler-migration storms and inverted scaling.
    An ``aggregate`` higher-order-function variant was also rejected:
    HOFs are CodegenFallback and de-codegen the whole span.)
@@ -45,6 +53,8 @@ This replaces the reference's STRtree candidate-pair generation
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -293,40 +303,55 @@ def build_cover_df(spark, keys, ga, res: int, covers=None,
     return df, n_near, n_rb
 
 
-def _in_test_box(x: Column, y: Column) -> Column:
+@functools.lru_cache(maxsize=64)
+def _cell_col(x_col: str, y_col: str, res: int) -> Column:
+    """``cell_of_xy_col`` on two named columns, built once per
+    ``(x_col, y_col, res)``: the Morton expression costs hundreds of
+    py4j round trips to build, and an unresolved Column is reusable
+    across plans."""
+    return cell_of_xy_col(F.col(x_col), F.col(y_col), res)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _in_test_box_sql(x_col: str, y_col: str) -> str:
     """Half-open sub-cell test box membership (±inf at open borders —
     compares are always true there, so un-subdivided rows pass freely)."""
+    x, y = _quote(x_col), _quote(y_col)
     return (
-        (x >= F.col("_bx0"))
-        & (x < F.col("_bx1"))
-        & (y >= F.col("_by0"))
-        & (y < F.col("_by1"))
+        f"(((({x} >= _bx0) AND ({x} < _bx1)) AND ({y} >= _by0)) "
+        f"AND ({y} < _by1))"
     )
 
 
-def _pip_pred_col(x: Column, y: Column, n_near: int, n_rb: int) -> Column:
-    """The PIP predicate as a fixed-width unrolled native expression —
-    whole-stage-codegen compatible (no higher-order functions), same
-    float64 arithmetic as the numpy kernel (kernels/geom.py:217-226) and
-    the DuckDB oracle.  Padded slots contribute 0 by construction.
-    Guarded by the sub-cell test box so subdivided cover rows stay
-    disjoint (exactly one row matches per point and polygon)."""
-    parity = F.col("_rbase")
+def _pip_pred_sql(x_col: str, y_col: str, n_near: int, n_rb: int) -> str:
+    """The PIP predicate as ONE fixed-width unrolled Spark SQL expression
+    (built on the driver as a string and parsed by one ``F.expr``, not
+    one py4j round trip per expression node) — whole-stage-codegen
+    compatible (no higher-order functions), same float64 arithmetic as
+    the numpy kernel (kernels/geom.py:217-226) and the DuckDB oracle.
+    Padded slots contribute 0 by construction.  Guarded by the sub-cell
+    test box so subdivided cover rows stay disjoint (exactly one row
+    matches per point and polygon).  Every operator is parenthesised so
+    the parsed tree is left-deep, the same shape a Column chain builds."""
+    x, y = _quote(x_col), _quote(y_col)
+    parity = "_rbase"
     for i in range(1, n_rb + 1):
-        parity = parity + (F.element_at(F.col("_rb"), i) <= y).cast("long")
+        parity = f"({parity} + CAST((element_at(_rb, {i}) <= {y}) AS BIGINT))"
     for i in range(1, n_near + 1):
-        e = F.element_at(F.col("_near"), i)
+        ax, ay, bx, by = (f"element_at(_near, {i}).{f}" for f in ("ax", "ay", "bx", "by"))
         # multiply-then-divide, matching the numpy kernel and the DuckDB
         # oracle's ((x2-x1)*(py-y1))/(y2-y1)+x1 order exactly — a
         # divide-then-multiply form rounds differently and can flip the
         # parity of points within ~1 ulp of an edge crossing
-        crossing = ((e["ay"] > y) != (e["by"] > y)) & (
-            x
-            < F.try_divide((e["bx"] - e["ax"]) * (y - e["ay"]), e["by"] - e["ay"])
-            + e["ax"]
+        crossing = (
+            f"((({ay} > {y}) != ({by} > {y})) AND ({x} < "
+            f"(try_divide((({bx} - {ax}) * ({y} - {ay})), ({by} - {ay})) + {ax})))"
         )
-        parity = parity + F.when(crossing, F.lit(1)).otherwise(F.lit(0))
-    return _in_test_box(x, y) & (F.col("_full") | ((parity % 2) == 1))
+        parity = f"({parity} + CASE WHEN {crossing} THEN 1 ELSE 0 END)"
+    return f"({_in_test_box_sql(x_col, y_col)} AND (_full OR (({parity} % 2) = 1)))"
 
 
 # when the enumerated FULL-cell cover would exceed this many rows, switch
@@ -488,6 +513,12 @@ def points_in_polygons_join(
     the reference's sfilter / sfilter_inverse, ``sfilter.py:67-134,
     209-268``).  ``id_cols`` names a unique key of the point side for the
     semi/anti/left bookkeeping joins (defaults to all point columns).
+    Semi/anti return the input point rows themselves, each at most once
+    per input row, with the point side's columns in its order; on the
+    enumerated-cover path they are one broadcast semi/anti join and do
+    not dedup, so they rely on ``id_cols`` being a unique key: duplicate
+    input rows stay duplicated.  Rows with a NULL coordinate match no
+    polygon: semi drops them, anti keeps them.
 
     Reference parity: get_neighbor_indices(points, polygons,
     predicate="intersects") — ``neighbors.py:19-116``.  With
@@ -570,19 +601,20 @@ def _pip_join_with_cover(
     key_col, x_col, y_col, how, max_distance, id_cols=None,
 ):
     spark = points.sparkSession
-    pts = points.withColumn("_cell", cell_of_xy_col(F.col(x_col), F.col(y_col), res))
+    pts = points.withColumn("_cell", _cell_col(x_col, y_col, res))
+    on_cell = pts["_cell"] == cover_df["cell"]
 
     if max_distance is None:
         # one codegen'd pass: broadcast hash join on the cell id with the
         # unrolled PIP predicate as the join condition — FULL cells satisfy
         # it via the _full flag, PARTIAL cells via crossing parity
-        pred = _pip_pred_col(F.col(x_col), F.col(y_col), n_near, n_rb)
+        cond = on_cell & F.expr(_pip_pred_sql(x_col, y_col, n_near, n_rb))
+        if how in ("semi", "anti"):
+            # a left semi/anti join emits each point row at most once:
+            # no dedup exchange, no second scan of the points
+            return pts.join(F.broadcast(cover_df), cond, "left_" + how).drop("_cell")
         matched = (
-            pts.join(
-                F.broadcast(cover_df),
-                (pts["_cell"] == cover_df["cell"]) & pred,
-                "inner",
-            )
+            pts.join(F.broadcast(cover_df), cond, "inner")
             .drop("cell", "_cell", "_full", "_rbase", "_rb", "_near",
                   "_bx0", "_by0", "_bx1", "_by1")
             .withColumnRenamed("_key", key_col)
@@ -593,8 +625,7 @@ def _pip_join_with_cover(
         # disjoint (at most one candidate row per point and polygon)
         cand = pts.join(
             F.broadcast(cover_df),
-            (pts["_cell"] == cover_df["cell"])
-            & _in_test_box(F.col(x_col), F.col(y_col)),
+            on_cell & F.expr(_in_test_box_sql(x_col, y_col)),
             "inner",
         ).drop("cell")
         partial = cand.drop("_full", "_rbase", "_rb", "_near",
@@ -646,12 +677,19 @@ def _apply_how(points, matched, key_col, how, id_cols=None):
 
 def sfilter(points: DataFrame, polygons: DataFrame, **kw) -> DataFrame:
     """Spatial semi-join (reference ``sfilter.py:67-134``): keep point rows
-    intersecting any polygon; no duplicates, no right columns."""
+    intersecting any polygon; no right columns.  Returns the input rows
+    themselves, each once however many polygons it falls in, so the
+    output has no duplicates when ``id_cols`` (default: all point
+    columns) is a unique key of the points, as
+    ``points_in_polygons_join`` requires."""
     return points_in_polygons_join(points, polygons, how="semi", **kw)
 
 
 def sfilter_inverse(points: DataFrame, polygons: DataFrame, **kw) -> DataFrame:
-    """Spatial anti-join (reference ``sfilter.py:209-268``)."""
+    """Spatial anti-join (reference ``sfilter.py:209-268``): keep point
+    rows intersecting no polygon, NULL-coordinate rows included.  Returns
+    the input rows themselves; ``id_cols`` must be a unique key of the
+    points, as for ``sfilter``."""
     return points_in_polygons_join(points, polygons, how="anti", **kw)
 
 

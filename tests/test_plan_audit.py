@@ -9,6 +9,7 @@ hand — so a refactor that breaks one fails CI, not the next 100 TB run.
 
 import io
 import contextlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -38,6 +39,26 @@ def test_sfilter_no_nested_loop(spark):
     p = plan_of(entry.queries()["sfilter"](spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
+
+
+def _parquet_scans(p: str) -> int:
+    return len(re.findall(r"^\(\d+\) Scan parquet", p, re.M))
+
+
+def test_sfilter_is_one_broadcast_semi_join(spark):
+    # the semi join emits each page once: no dedup exchange after the join
+    p = plan_of(entry.queries()["sfilter"](spark, SF))
+    assert "BroadcastHashJoin LeftSemi" in p, p
+    assert _parquet_scans(p) == 1, p
+
+
+def test_sfilter_inverse_is_one_broadcast_anti_join(spark):
+    # one pass over the pages: no inner join + dedup + SortMergeJoin
+    # anti-join back onto a second scan of lineitem
+    p = plan_of(entry.queries()["sfilter_inverse"](spark, SF))
+    assert "BroadcastHashJoin LeftAnti" in p, p
+    assert "SortMergeJoin" not in p, p
+    assert _parquet_scans(p) == 1, p
 
 
 def test_rep_stats_is_map_only(spark):

@@ -83,20 +83,96 @@ def test_full_cells_need_no_refine(spark):
     assert frac_full > 0.5, f"cover is mostly boundary cells: {frac_full}"
 
 
+def _rows(df, how, key_col="muni_id"):
+    cols = ["uid", key_col] if how == "inner" else ["uid"]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
 def test_compact_cover_path_matches_enumerated(spark, truth):
     """Forcing the compact (morton-range + searchsorted) path must give
-    byte-identical join rows to the enumerated broadcast path."""
-    from ssb_sgis_spark.operators.sjoin import points_in_polygons_join
+    byte-identical rows to the enumerated broadcast path — for the join
+    and for sfilter / sfilter_inverse (one broadcast semi / anti join on
+    the enumerated path) — and both must equal brute force."""
+    uids, want = truth
+    inside = {u for u, _ in want}
+    expected = {
+        "inner": sorted(want),
+        "semi": sorted((u,) for u in inside),
+        "anti": sorted((int(u),) for u in uids if u not in inside),
+    }
+    for how, rows in expected.items():
+        enum = points_in_polygons_join(
+            pages_df(spark, SF), muni_df(spark), how=how, id_cols=["uid"]
+        )
+        compact = points_in_polygons_join(
+            pages_df(spark, SF), muni_df(spark), how=how, id_cols=["uid"],
+            compact_threshold=0,
+        )
+        assert _rows(enum, how) == _rows(compact, how) == rows, how
 
-    enum = points_in_polygons_join(
-        pages_df(spark, SF), muni_df(spark)
-    ).select("uid", "muni_id")
-    compact = points_in_polygons_join(
-        pages_df(spark, SF), muni_df(spark), compact_threshold=0
-    ).select("uid", "muni_id")
-    a = sorted((r["uid"], r["muni_id"]) for r in enum.collect())
-    b = sorted((r["uid"], r["muni_id"]) for r in compact.collect())
-    assert a == b
+
+def _square(x0, y0, x1, y1):
+    from ssb_sgis_spark.kernels import wkb as kwkb
+
+    ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
+    return bytearray(kwkb.encode_polygon([ring]))
+
+
+@pytest.mark.parametrize("threshold", [None, 0])
+def test_semi_anti_overlap_and_null_coordinates(spark, threshold):
+    """Two overlapping squares: a point inside both is emitted ONCE by
+    sfilter and dropped by sfilter_inverse; a NULL-x row is dropped by
+    sfilter and kept by sfilter_inverse.  Points 5 and 6 sit 1 m either
+    side of an edge, so the partial-cell predicate decides them."""
+    polys = spark.createDataFrame(
+        [
+            ("a", _square(260000.0, 6640000.0, 270000.0, 6650000.0)),
+            ("b", _square(265000.0, 6645000.0, 275000.0, 6655000.0)),
+        ],
+        "muni_id string, geometry binary",
+    )
+    pts = spark.createDataFrame(
+        [
+            (1, 267000.0, 6647000.0),  # in a and b
+            (2, 261000.0, 6641000.0),  # in a only
+            (3, 300000.0, 6700000.0),  # outside both
+            (4, None, 6647000.0),  # NULL x
+            (5, 269999.0, 6647000.0),  # in a and b, 1 m inside a's edge
+            (6, 270001.0, 6641000.0),  # 1 m outside a, below b
+        ],
+        "uid long, x double, y double",
+    )
+    kw = dict(id_cols=["uid"], compact_threshold=threshold)
+    inner = points_in_polygons_join(pts, polys, **kw)
+    assert _rows(inner, "inner") == [
+        (1, "a"), (1, "b"), (2, "a"), (5, "a"), (5, "b")
+    ]
+    semi = sfilter(pts, polys, **kw)
+    anti = sfilter_inverse(pts, polys, **kw)
+    assert semi.columns == anti.columns == pts.columns
+    assert _rows(semi, "semi") == [(1,), (2,), (5,)]
+    assert _rows(anti, "anti") == [(3,), (4,), (6,)]
+
+
+def test_warm_join_plan_build_round_trips(spark, monkeypatch):
+    """Driver-cost guard: with the cover (and the Morton column) warm, a
+    join builds its plan in tens of py4j round trips.  Building the
+    unrolled PIP predicate or the Morton column one Column call per
+    expression node costs thousands."""
+    pages, munis = pages_df(spark, SF), muni_df(spark)
+    points_in_polygons_join(pages, munis)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    points_in_polygons_join(pages, munis)
+    monkeypatch.undo()
+    assert len(calls) <= 150, f"{len(calls)} py4j round trips"
 
 
 def test_dense_polygon_bounded_predicate_width(spark, truth):
